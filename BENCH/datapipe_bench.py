@@ -9,9 +9,10 @@ its predecessor with one word perturbed, so MinHash/SimHash banding has
 real positives to find. Then times:
 
 * simhash64 (arrow twin) over the corpus;
-* simhash_candidates at the SCALE configuration (max_hamming=3, n_bands=4,
-  16-bit bands): bucket economics are the whole point — expected candidate
-  pairs ~= n_bands * sum_bucket |bucket|^2 / 2. The q30 default (7, 8) has
+* plain SimHash banding at the SCALE configuration (max_hamming=3, i.e.
+  simhash_candidates_multiblock with n_blocks=4, comb=1: four 16-bit band
+  tables): bucket economics are the whole point — expected candidate
+  pairs ~= n_blocks * sum_bucket |bucket|^2 / 2. The q30 default (7, 8) has
   8-bit bands = 256 buckets/band; at 1M docs that is ~4k docs per bucket
   and ~10^10 candidate pairs — structurally infeasible at this scale, which
   this bench DOCUMENTS rather than hides (radius >3 at web scale needs
@@ -139,8 +140,8 @@ def main() -> None:
     if _stage_on("simhash_candidates_h3_b4"):
         n_cand = timed(
             "simhash_candidates_h3_b4",
-            lambda: dd.simhash_candidates(
-                sims_m, max_hamming=3, n_bands=4).count(),
+            lambda: dd.simhash_candidates_multiblock(
+                sims_m, max_hamming=3, n_blocks=4, comb=1).count(),
         )
         res["stages_out"]["simhash_candidates_h3_b4_pairs"] = n_cand
         # band-table economics: bucket population of the 4 x 16-bit band table

@@ -130,7 +130,7 @@ def main():
         t("q36.full", lambda: noop(
             simhash_candidates_multiblock(simhash64(docs), max_hamming=7,
                                           n_blocks=10, comb=3)))
-        # candidate-pair volume (pre-distinct) at this sf
+        # corpus size and distinct-signature count at this sf
         sims = simhash64(docs).localCheckpoint(eager=False)
         n = sims.count()
         print(f"docs={n} distinct_simhash="

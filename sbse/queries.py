@@ -513,26 +513,25 @@ def q30_simhash_candidates(spark, sf_dir):
     # SimHash near-dup candidates at radius 7. The ORACLE is the plain
     # 8x8-band SQL (pigeonhole-complete for hamming <= 7: any such pair
     # shares a clean band, so the banding emits EXACTLY the radius-7 pair
-    # set). The ENGINE plan (round 6) is estimate-driven: plain banding's
-    # 8-bit keys make the self-join volume Sum |bucket|^2 — fine at small
-    # corpora (5e6 pairs / ~1.0s at sf0.1) but quadratic-blown at sf1.0
-    # (5.1e8 pairs, measured 111s) — so a cheap exact histogram prices it
-    # and routes large corpora through the identical-output multi-block
-    # tables (~5.8s at sf1.0; equivalence is what q36's brute-force oracle
-    # pins). Guide §2.5/§3: the join key width was the skew.
+    # set). The ENGINE takes one of two identical-output routes after one
+    # count: the broadcast all-pairs sweep up to SIMHASH_BRUTE_MAX_DOCS
+    # docs, the multi-block kernel above it. The kernel runs at (10, 3),
+    # not plain banding's (8, 1): radius 7 forces plain banding onto 8-bit
+    # keys whose bucket volume Sum |bucket|^2 is quadratic-blown at sf1.0
+    # (5.1e8 pairs, measured 111s), where the ~20-bit keys took ~5.8s.
     return dd.simhash_candidates_adaptive(
         dd.simhash64(_widen(_docs(spark, sf_dir))), max_hamming=7,
-        n_bands=8, n_blocks=10, comb=3)
+        n_blocks=10, comb=3)
 
 
 def q36_simhash_multiblock(spark, sf_dir):
-    """Radius-7 SimHash candidates through the MULTI-BLOCK banding tables
-    (10 blocks, C(10,3)=120 3-block combination keys, ~19-bit): the
-    scale-correct twin of q30's plain 8x8 banding, which radius 7 forces
-    onto 8-bit keys (~2e10 candidate pairs at 1M docs, refused by the
-    guard). Both are pigeonhole-complete, so both return EXACTLY the pairs
-    with hamming <= 7 — the oracle is the brute-force pair scan, which
-    checks completeness directly rather than mirroring the banding."""
+    """Radius-7 SimHash candidates through the multi-block kernel at every
+    corpus size (10 blocks, C(10,3)=120 3-block combination keys, ~19-21
+    bits), where q30 routes small corpora to the all-pairs sweep. Plain
+    8x8 banding would put radius 7 on 8-bit keys (~2e10 candidate pairs at
+    1M docs). The kernel is pigeonhole-complete, so it returns EXACTLY the
+    pairs with hamming <= 7 — the oracle is the brute-force pair scan,
+    which checks completeness directly rather than mirroring the banding."""
     return dd.simhash_candidates_multiblock(
         dd.simhash64(_widen(_docs(spark, sf_dir))), max_hamming=7, n_blocks=10,
         comb=3)

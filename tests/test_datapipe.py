@@ -59,7 +59,7 @@ def test_minhash_lsh_matches_exact_jaccard(spark):
 
 
 def test_simhash(spark):
-    from sbse.datapipe.dedup import simhash64, simhash_candidates
+    from sbse.datapipe.dedup import simhash64, simhash_candidates_multiblock
 
     d = _docs(spark, [BASE, BASE, NEAR, OTHER])
     sims = simhash64(d)
@@ -68,14 +68,16 @@ def test_simhash(spark):
     ham_near = bin(by_id[0] ^ by_id[2]).count("1")
     ham_far = bin(by_id[0] ^ by_id[3]).count("1")
     assert ham_near < ham_far
-    # radius 16 needs n_bands > 16 for the pigeonhole guarantee (32 divides 64)
+    # plain banding at radius 16 needs more than 16 one-block tables
     cands = {(r.doc_a, r.doc_b): r.hamming
-             for r in simhash_candidates(sims, max_hamming=16, n_bands=32).collect()}
+             for r in simhash_candidates_multiblock(
+                 sims, max_hamming=16, n_blocks=32, comb=1).collect()}
     assert cands[(0, 1)] == 0
     assert (0, 2) in cands
     # guarantee-violating parameters are refused loudly (ADVICE r2)
     with pytest.raises(ValueError, match="pigeonhole"):
-        simhash_candidates(sims, max_hamming=8, n_bands=4)
+        simhash_candidates_multiblock(sims, max_hamming=8, n_blocks=4,
+                                      comb=1)
 
 
 def test_simhash_twins_equal(spark):
@@ -544,106 +546,169 @@ def test_grouped_scorer_group_cap_fallback(spark):
 
 
 def test_simhash_candidates_scale_guard(spark):
-    """The (7, 8) default's 8-bit band keys must REFUSE a doc population
-    whose estimated candidate-pair volume exceeds max_candidate_pairs
-    (VERDICT r4: 1M docs => ~2e10 pairs silently), while small inputs and
-    explicit opt-outs still run."""
-    from sbse.datapipe.dedup import simhash64, simhash_candidates
+    """Plain radius-7 banding's (8 blocks, comb 1) 8-bit keys must REFUSE a
+    doc population whose estimated candidate-pair volume exceeds
+    max_candidate_pairs (1M docs would give ~2e10 pairs), while small
+    inputs and explicit opt-outs still run."""
+    from sbse.datapipe.dedup import simhash64, simhash_candidates_multiblock
 
     docs = _docs(spark, [BASE, NEAR, OTHER] * 20)
     sims = simhash64(docs)
+
+    def plain(**kw):
+        return simhash_candidates_multiblock(sims, max_hamming=7,
+                                             n_blocks=8, comb=1, **kw)
+
     # tiny cap: the 60-doc population estimates >> 1 pair -> refused
     with pytest.raises(ValueError, match="candidate pairs"):
-        simhash_candidates(sims, max_candidate_pairs=1).collect()
+        plain(max_candidate_pairs=1).collect()
     # None disables the guard; default cap passes at this scale
-    assert simhash_candidates(sims, max_candidate_pairs=None).count() > 0
-    assert simhash_candidates(sims).count() > 0
+    assert plain(max_candidate_pairs=None).count() > 0
+    assert plain().count() > 0
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
 
 
 def test_simhash_multiblock_complete(spark):
-    """Multi-block banding (C(10,3) 3-block combination tables) returns
-    EXACTLY the radius-7 pair set — equal to plain (7, 8) banding (also
-    complete) AND to the brute-force cross scan, on real corpus data."""
-    from sbse.datapipe.dedup import (simhash64, simhash_candidates,
-                                     simhash_candidates_multiblock)
-
-    docs = (spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-            .limit(400))
-    sims = simhash64(docs).localCheckpoint()
-    mb = {(r.doc_a, r.doc_b): r.hamming
-          for r in simhash_candidates_multiblock(sims).collect()}
-    plain = {(r.doc_a, r.doc_b): r.hamming
-             for r in simhash_candidates(sims).collect()}
-    assert mb == plain
-    by_id = sorted((r.doc_id, r.simhash) for r in sims.collect())
-    brute = {}
-    for i, (ida, sa) in enumerate(by_id):
-        for idb, sb in by_id[i + 1:]:
-            h = bin((sa ^ sb) & 0xFFFFFFFFFFFFFFFF).count("1")
-            if h <= 7:
-                brute[(ida, idb)] = h
-    assert mb == brute
-
-
-def test_multiblock_numpy_matches_join(spark, monkeypatch):
-    """Round-6 vectorized pairing: the mapInPandas run-length pairing path
-    (default) emits EXACTLY the JVM self-join path's pair set — same
-    (doc_a, doc_b, hamming) rows, doc_a < doc_b — on real corpus data
-    including buckets with >2 members."""
+    """The multi-block kernel returns EXACTLY the radius pair set of the
+    brute-force cross scan — as a row list, so a duplicate row fails too —
+    on the full sf0.01 corpus (buckets with >2 members): at the (10, 3)
+    default, as plain (8, 1) banding, and at (8, 6) radius 2, whose 48-bit
+    keys used to overflow the packed (table_id, key) sort key."""
     from sbse.datapipe.dedup import simhash64, simhash_candidates_multiblock
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     sims = simhash64(docs).localCheckpoint()
-    monkeypatch.setenv("SBSE_MULTIBLOCK_JOIN", "jvm")
-    jvm = {(r.doc_a, r.doc_b): r.hamming
-           for r in simhash_candidates_multiblock(sims).collect()}
-    monkeypatch.setenv("SBSE_MULTIBLOCK_JOIN", "numpy")
-    np_ = {(r.doc_a, r.doc_b): r.hamming
-           for r in simhash_candidates_multiblock(sims).collect()}
-    assert np_ == jvm
-    assert len(np_) > 0
-    assert all(a < b for (a, b) in np_)
+    by_id = sorted((r.doc_id, r.simhash) for r in sims.collect())
+    assert len(by_id) == 500
+    ham = []
+    for i, (ida, sa) in enumerate(by_id):
+        for idb, sb in by_id[i + 1:]:
+            ham.append((ida, idb, bin((sa ^ sb) & 0xFFFFFFFFFFFFFFFF)
+                        .count("1")))
+    for mh, n_blocks, comb in ((7, 10, 3), (7, 8, 1), (2, 8, 6)):
+        brute = [p for p in ham if p[2] <= mh]
+        got = _sorted_rows(simhash_candidates_multiblock(
+            sims, max_hamming=mh, n_blocks=n_blocks, comb=comb))
+        assert got == brute and len(brute) > 0, (mh, n_blocks, comb)
 
 
 def test_simhash_smallcorpus_sweep_matches_banding(spark, monkeypatch):
-    """Round-6 small-corpus route: the broadcast all-pairs sweep emits
-    EXACTLY the banding paths' radius pair set, and the adaptive router's
-    threshold env is honored (0 forces the banding routes)."""
-    from sbse.datapipe.dedup import (simhash64, simhash_candidates_adaptive,
-                                     simhash_candidates_multiblock,
-                                     simhash_pairs_smallcorpus)
+    """The broadcast all-pairs sweep emits EXACTLY the kernel's radius pair
+    set, and the adaptive router gives identical rows AND schema on both
+    sides of SIMHASH_BRUTE_MAX_DOCS (0 forces the kernel), for bigint and
+    int doc ids alike."""
+    import sbse.datapipe.dedup as dd
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    sims = simhash64(docs).localCheckpoint()
-    mb = {(r.doc_a, r.doc_b): r.hamming
-          for r in simhash_candidates_multiblock(sims).collect()}
-    sweep = {(r.doc_a, r.doc_b): r.hamming
-             for r in simhash_pairs_smallcorpus(sims).collect()}
+    sims = dd.simhash64(docs).localCheckpoint()
+    mb = _sorted_rows(dd.simhash_candidates_multiblock(sims))
+    sweep = _sorted_rows(dd.simhash_pairs_smallcorpus(sims))
     assert sweep == mb and len(sweep) > 0
-    # adaptive: default routes the 500-doc corpus through the sweep;
-    # forcing the threshold to 0 must give the identical answer via banding
-    monkeypatch.setenv("SBSE_SIMHASH_BRUTE_MAX_DOCS", "0")
-    banded = {(r.doc_a, r.doc_b): r.hamming
-              for r in simhash_candidates_adaptive(sims).collect()}
-    monkeypatch.delenv("SBSE_SIMHASH_BRUTE_MAX_DOCS")
-    routed = {(r.doc_a, r.doc_b): r.hamming
-              for r in simhash_candidates_adaptive(sims).collect()}
-    assert routed == banded == mb
+    for ids in (sims, sims.withColumn("doc_id", F.col("doc_id").cast("int"))):
+        # default routes the 500-doc corpus through the sweep
+        routed = dd.simhash_candidates_adaptive(ids)
+        with monkeypatch.context() as m:
+            m.setattr(dd, "SIMHASH_BRUTE_MAX_DOCS", 0)
+            banded = dd.simhash_candidates_adaptive(ids)
+            sweep_t = dd.simhash_pairs_smallcorpus(ids).schema
+            assert banded.schema == routed.schema == sweep_t
+            assert sweep_t["doc_a"].dataType == ids.schema["doc_id"].dataType
+            assert _sorted_rows(banded) == _sorted_rows(routed) == mb
+
+
+def test_simhash_routes_duplicate_ids_giant_bucket(spark):
+    """Degenerate input: duplicate doc_id rows among 2,059 identical
+    signatures — one bucket per table, past the kernel's 2,048-row
+    row-blocked threshold. Sweep and kernel return the same sorted row
+    list (duplicate rows count) and neither emits a (d, d) self-pair."""
+    from sbse.datapipe.dedup import (simhash_candidates_multiblock,
+                                     simhash_pairs_smallcorpus)
+
+    ids = list(range(2049)) + list(range(10))
+    sims = spark.createDataFrame(
+        [(i, 0x0123456789ABCDEF) for i in ids],
+        "doc_id bigint, simhash bigint").localCheckpoint()
+
+    def rows(df):
+        pdf = df.toPandas()
+        assert (pdf.doc_a < pdf.doc_b).all()
+        return pdf.sort_values(list(pdf.columns)).to_numpy().tolist()
+
+    sweep = rows(simhash_pairs_smallcorpus(sims))
+    kernel = rows(simhash_candidates_multiblock(sims, max_hamming=7,
+                                                n_blocks=8, comb=1))
+    # every row pair with distinct ids, once: C(2059, 2) minus the 10
+    # same-id pairs
+    assert len(sweep) == 2059 * 2058 // 2 - 10
+    assert kernel == sweep
+
+
+def test_q30_large_route_one_count(spark, monkeypatch):
+    """q30's large route (sweep threshold patched to 0) spends exactly one
+    count before its pairing job: building its plan runs the same Spark
+    jobs as reading, widening and counting its simhash input once (one
+    count is two jobs under AQE, map stage + result) — no histogram job,
+    no second count."""
+    import uuid
+
+    import sbse.datapipe.dedup as dd
+    from sbse import queries as Q
+    from tests.conftest import SF_DIR as sf
+
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description")
+    prev = [sc.getLocalProperty(k) for k in props]
+
+    def jobs(name, fn):
+        # statusTracker keeps a group's jobs for the session: fresh names
+        group = f"{name}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, name)
+        try:
+            out = fn()
+        finally:
+            for k, v in zip(props, prev):
+                sc.setLocalProperty(k, v)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, ref = jobs("q30-ref", lambda: dd.simhash64(
+        Q._widen(Q._docs(spark, sf))).localCheckpoint(eager=False).count())
+    small = Q.q30_simhash_candidates(spark, sf)
+    monkeypatch.setattr(dd, "SIMHASH_BRUTE_MAX_DOCS", 0)
+    large, built = jobs("q30-large",
+                        lambda: Q.q30_simhash_candidates(spark, sf))
+    assert ref >= 1 and built == ref
+    assert _sorted_rows(large) == _sorted_rows(small)
 
 
 def test_simhash_multiblock_params(spark):
     """comb > n_blocks - max_hamming breaks the pigeonhole guarantee and is
-    refused; the uniform-occupancy guard refuses tiny caps; None disables."""
-    from sbse.datapipe.dedup import simhash64, simhash_candidates_multiblock
+    refused; so are keys too wide for the packed sort key and non-integer
+    doc ids; the uniform-occupancy guard refuses tiny caps; None
+    disables."""
+    import sbse.datapipe.dedup as dd
 
-    sims = simhash64(_docs(spark, [BASE, NEAR, OTHER] * 40))
+    sims = dd.simhash64(_docs(spark, [BASE, NEAR, OTHER] * 40))
     with pytest.raises(ValueError, match="agreeing blocks"):
-        simhash_candidates_multiblock(sims, max_hamming=7, n_blocks=9,
-                                      comb=3)
+        dd.simhash_candidates_multiblock(sims, max_hamming=7, n_blocks=9,
+                                         comb=3)
+    # two 32-bit blocks in one table: a 64-bit key cannot pack
+    with pytest.raises(ValueError, match="63-bit"):
+        dd.simhash_candidates_multiblock(sims, max_hamming=0, n_blocks=2,
+                                         comb=2)
+    str_ids = sims.withColumn("doc_id", F.col("doc_id").cast("string"))
+    for route in (dd.simhash_candidates_multiblock,
+                  dd.simhash_candidates_adaptive,
+                  dd.simhash_pairs_smallcorpus):
+        with pytest.raises(ValueError, match="got string"):
+            route(str_ids)
     # 120 docs over 120 ~19-bit tables: uniform estimate ~3 pairs > cap 1
     with pytest.raises(ValueError, match="candidate pairs"):
-        simhash_candidates_multiblock(sims, max_candidate_pairs=1).collect()
-    assert simhash_candidates_multiblock(
+        dd.simhash_candidates_multiblock(sims,
+                                         max_candidate_pairs=1).collect()
+    assert dd.simhash_candidates_multiblock(
         sims, max_candidate_pairs=None).count() > 0
 
 
