@@ -138,7 +138,8 @@ def main():
 
 
 def profile_q34(spark, sf_dir):
-    """Stage breakdown of monster_safe_sessions at sf_dir."""
+    """Stage breakdown of monster_safe_sessions (chunked_sessions + the
+    groupBy rollup) at sf_dir."""
     from sbse.bigkey import CHUNK_MS_DEFAULT, KEY_COLS, _with_chunk
     from sbse.queries import _decoded
     from sbse.sessionize import _MERGE_FIELDS, ord_col, states_only
@@ -169,11 +170,6 @@ def profile_q34(spark, sf_dir):
                    F.lit(1)).otherwise(F.lit(0)),
         )
         e = e.withColumn("_lsidx", F.sum("_lnew").over(wcr))
-        e = e.withColumn(
-            "_lstart",
-            F.last(F.when(F.col("_lnew") == 1, F.col("ts")),
-                   ignorenulls=True).over(wcr),
-        )
         e = e.withColumn("_ord", ord_col())
         return e
 
@@ -187,7 +183,6 @@ def profile_q34(spark, sf_dir):
             F.min("ts").alias("_first_ts"),
             F.max("ts").alias("_last_ts"),
             F.max("_lsidx").alias("_nloc"),
-            F.expr("max_by(_lstart, struct(ts, seq))").alias("_last_lstart"),
         )
         return summ
 

@@ -4,41 +4,32 @@ The plain ``locf_merge``/``sessionize`` windows partition by (source, key):
 one key with more events than an executor comfortably sorts pins a single
 task (Spark's external sort spills rather than OOMs, but the stage becomes
 one serial task — the reference has the same defect as unbounded per-key
-maps, cmd/tracker/main.go:51-53). These twins bound EVERY window partition
-to (source, key, time-chunk) and stitch chunk boundaries through a tiny
-per-chunk summary table — the segmented-scan decomposition:
+maps, cmd/tracker/main.go:51-53). The operators here bound EVERY window
+partition to (source, key, time-chunk) and stitch chunk boundaries through
+a small per-chunk summary table — the segmented-scan (slice) decomposition:
 
-* ``locf_merge_chunked`` — chunk-local LOCF, then each chunk's final carry
-  state (one row per populated chunk) is prefix-LOCF'd over chunks and
-  joined back as the carry-in; event value = coalesce(local LOCF, carry-in,
-  zero). Identical output to ``locf_merge`` (equality-tested, incl. a
-  hypothesis property test).
-* ``sessionize_chunked`` — chunk-local gap sessionization, then the summary
-  window decides which chunk-opening sessions merge backward
-  (first_ts - prev chunk last_ts <= gap), assigns global session ordinals
-  via per-chunk new-session offsets, and recovers each merged chain's true
-  start with an anchored LOCF. Identical output to ``sessionize``.
+* ``chunked_sessions`` — ONE bounded window pass computes chunk-local LOCF
+  and chunk-local gap sessionization together (the session lag columns
+  depend only on (ts, seq), never on LOCF output); one summary groupBy
+  carries each chunk's final LOCF state and its session stitch facts; one
+  join hands the carry-ins and session offsets back. Output per event ==
+  ``sessionize(locf_merge(.))`` minus ``new_sess``/``s_start``/
+  ``session_id``. It serves both ``run_pipeline(bigkey_chunk_ms=...)`` and
+  q34 (``monster_safe_sessions``).
 * ``session_rollup_agg`` — the groupBy twin of ``session_rollup``: pure
   partial-aggregatable min_by/max_by/count/max on (source, key, sidx), so a
   10M-event session reduces map-side to one row per input partition instead
-  of sorting in one task. Identical output (equality-tested).
+  of sorting in one task. It re-derives each session's start from min(ts),
+  which is why the chunked pass needs no chain-start columns.
+* ``counter_increase_chunked`` — the same decomposition for counter
+  increases (q43); its only cross-chunk state is the last sample value.
 
-Scale shape: two shuffles per operator family (events hash to
-(source, key, chunk) for the bounded window; the summary join is an
-equi-join on the same keys against a table with one row per populated chunk
-— ~1e4-1e6x smaller than events). chunk_ms must exceed gap_ms so a session
-gap can only straddle ADJACENT populated chunks' boundary rows (the stitch
-condition itself uses real timestamps, so non-adjacent populated chunks
-merge correctly too — relevant only at chunk_ms == gap_ms + epsilon).
-
-``monster_safe_sessions`` (the full chain, q34) does NOT compose the two
-twins: it fuses both column families into ONE bounded window pass + one
-summary + one broadcast join (the session lag columns depend only on
-(ts, seq), never on LOCF output), and prunes to the columns the rollup
-provably reads before the shuffle — the modular chain pays two full event
-exchanges/sorts/materializations for the same answer. The twins stay for
-modular use; the hypothesis property test pins the fused chain to the
-plain path.
+Scale shape: the event frame is exchanged once, to (source, key, chunk);
+the summary is one row per populated chunk and joins back on the same keys.
+chunk_ms must exceed gap_ms so a session gap can only straddle ADJACENT
+populated chunks' boundary rows (the stitch condition itself uses real
+timestamps, so non-adjacent populated chunks merge correctly too — relevant
+only at chunk_ms == gap_ms + epsilon).
 """
 
 from __future__ import annotations
@@ -56,196 +47,138 @@ CHUNK_MS_DEFAULT = 3_600_000
 
 
 def _with_chunk(df: DataFrame, chunk_ms: int) -> DataFrame:
-    """Attach the time-chunk column — or reuse an existing ``_chunk``
-    WHOSE chunk size provably matches.
-
-    The reuse matters for the chained plan: a frame coming out of
-    ``locf_merge_chunked(keep_chunk=True)`` already carries the chunk
-    column aligned with its partitioning/sort; recomputing the floor()
-    creates a fresh attribute id Catalyst cannot prove equal, forcing a
-    second full exchange + sort of the event frame. Round 6 (ADVICE r5):
-    the reuse is no longer on trust — the column is stamped with its
-    chunk_ms in field metadata, and a pre-existing ``_chunk`` whose stamp
-    is absent or different raises instead of silently mis-chunking the
-    stitch (locf_merge_chunked(chunk_ms=A) chained into
-    sessionize_chunked(chunk_ms=B) with A != B used to produce wrong
-    sessions with no error)."""
+    """Attach the time-chunk column ``_chunk``. A pre-existing ``_chunk``
+    is refused: a column of that name built with another chunk size would
+    silently mis-chunk the stitch."""
     if "_chunk" in df.columns:
-        meta = df.schema["_chunk"].metadata
-        if meta.get("chunk_ms") != chunk_ms:
-            raise ValueError(
-                f"pre-existing _chunk column was built with "
-                f"chunk_ms={meta.get('chunk_ms')!r} but this operator needs "
-                f"chunk_ms={chunk_ms}; drop the column or align the sizes"
-            )
-        return df
+        raise ValueError(
+            "input already has a _chunk column; drop it before chunking "
+            f"(chunk_ms={chunk_ms})"
+        )
     return df.select(
-        "*",
-        F.floor(F.unix_millis("ts") / F.lit(chunk_ms)).alias(
-            "_chunk", metadata={"chunk_ms": chunk_ms}),
-    )
+        "*", F.floor(F.unix_millis("ts") / F.lit(chunk_ms)).alias("_chunk"))
 
 
-def locf_merge_chunked(states: DataFrame,
-                       chunk_ms: int = CHUNK_MS_DEFAULT,
-                       keep_chunk: bool = False) -> DataFrame:
-    """W1 twin with bounded window partitions; output == ``locf_merge``.
-
-    Phase 1 (bounded window): running LOCF of each field within
-    (source, key, chunk). Phase 2 (summary): each chunk's FINAL carry value
-    per field (max_by over arrival order — partial-aggregatable groupBy),
-    prefix-LOCF'd across the key's chunks, shifted one chunk back = the
-    carry-in. Phase 3: join carry-ins back; merged = coalesce(local, carry,
-    zero).
-
-    Plan notes (round 5, ADVICE r4): the chunk-windowed frame is
-    localCheckpointed before the summary is derived from it — without that
-    the join's two branches recompute the dominant decode+window stage
-    twice unless ReuseExchange happens to fire. The carry table (one row
-    per populated (source, key, chunk)) is joined back SHUFFLE_HASH
-    (round 6, VERDICT r5 "what's wrong" #1: it grows as keys x time-chunks
-    — unbounded over retention — so the old forced broadcast would
-    eventually blow the 8 GB relation cap with no fallback); the event side
-    keeps the window's hash partitioning with no second exchange and no
-    sort, the carry side pays one small exchange + per-partition hash
-    build."""
-    e = _with_chunk(states, chunk_ms)
-    wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
-    wcr = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    for c, zero in _MERGE_FIELDS:
-        e = e.withColumn(
-            f"_loc_{c}",
-            F.last(F.nullif(F.col(c), F.lit(zero)), ignorenulls=True).over(wcr),
-        )
-    e = e.withColumn("_ord", ord_col())
-    e = e.localCheckpoint(eager=False)
-    summ = e.groupBy(*KEY_COLS, "_chunk").agg(
-        *[
-            F.expr(f"max_by(_loc_{c}, _ord)").alias(f"_fin_{c}")
-            for c, _ in _MERGE_FIELDS
-        ]
-    )
-    ws = Window.partitionBy(*KEY_COLS).orderBy("_chunk")
-    w_prev = ws.rowsBetween(Window.unboundedPreceding, -1)
-    carry = summ.select(
-        *KEY_COLS,
-        "_chunk",
-        *[
-            F.last(f"_fin_{c}", ignorenulls=True).over(w_prev).alias(f"_carry_{c}")
-            for c, _ in _MERGE_FIELDS
-        ],
-    )
-    out = e.join(carry.hint("SHUFFLE_HASH"), [*KEY_COLS, "_chunk"])
-    for c, zero in _MERGE_FIELDS:
-        out = out.withColumn(
-            f"{c}_m",
-            F.coalesce(F.col(f"_loc_{c}"), F.col(f"_carry_{c}"), F.lit(zero)),
-        )
-    drop = (["_ord"] + ([] if keep_chunk else ["_chunk"])
-            + [f"_loc_{c}" for c, _ in _MERGE_FIELDS]
-            + [f"_carry_{c}" for c, _ in _MERGE_FIELDS])
-    return out.drop(*drop)
-
-
-def sessionize_chunked(
-    merged: DataFrame,
+def chunked_sessions(
+    states: DataFrame,
     gap_ms: int = GAP_MS_NORTH,
     chunk_ms: int = CHUNK_MS_DEFAULT,
     close_trailing: bool = True,
 ) -> DataFrame:
-    """W2/W3 twin with bounded window partitions; output == ``sessionize``
-    (same columns: new_sess, sidx, s_start, session_id, is_trailing,
-    close_trailing).
+    """Chunk-local LOCF and chunk-local sessionization in ONE bounded window
+    pass, one summary groupBy carrying BOTH the LOCF carry state and the
+    session stitch facts, one join back. Carries every input column through
+    and adds ``{c}_m`` for each ``_MERGE_FIELDS`` column present in the
+    input, plus ``sidx``, ``is_trailing`` and ``close_trailing`` — per event
+    equal to ``sessionize(locf_merge(.))`` minus ``new_sess``/``s_start``/
+    ``session_id``, in the same column order. Callers prune by what they
+    select: columns the output must not carry (e.g. the token arrays) should
+    be dropped from ``states`` before the call.
 
     Stitch math per chunk c (summary window over the key's chunks):
+      carry-in_f    = last non-null final LOCF value of f in prior chunks
       merge_c       = first_ts(c) - last_ts(prev chunk) <= gap
       new_sessions  = n_local(c) - merge_c
       offset O_c    = cumulative new_sessions of prior chunks
       global sidx   = O_c + local_sidx - merge_c     (merged chains share
                       the previous chunk's last global ordinal)
-      chain start T = anchored LOCF: a chunk that is ONE session merging
-                      backward contributes no anchor, so T carries the
-                      chain's true start forward across any chain length.
     """
     if chunk_ms <= gap_ms:
         raise ValueError(
             f"chunk_ms={chunk_ms} must exceed gap_ms={gap_ms}: a chunk "
             f"shorter than the gap cannot bound the stitch to boundaries"
         )
-    df = _with_chunk(merged, chunk_ms)
+    fields = [(c, z) for c, z in _MERGE_FIELDS if c in states.columns]
+    e = _with_chunk(states, chunk_ms)
     wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
     wcr = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # LOCF locals
+    for c, zero in fields:
+        e = e.withColumn(
+            f"_loc_{c}",
+            F.last(F.nullif(F.col(c), F.lit(zero)), ignorenulls=True).over(wcr),
+        )
+    # session locals (ts/seq only)
     prev_ms = F.lag(F.unix_millis("ts")).over(wc)
-    lnew = F.when(
-        prev_ms.isNull() | (F.unix_millis("ts") - prev_ms > F.lit(gap_ms)),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    df = df.withColumn("_lnew", lnew)
-    df = df.withColumn("_lsidx", F.sum("_lnew").over(wcr))
-    df = df.withColumn(
-        "_lstart",
-        F.last(F.when(F.col("_lnew") == 1, F.col("ts")), ignorenulls=True).over(wcr),
+    e = e.withColumn(
+        "_lnew",
+        F.when(
+            prev_ms.isNull() | (F.unix_millis("ts") - prev_ms > F.lit(gap_ms)),
+            F.lit(1),
+        ).otherwise(F.lit(0)),
     )
-    # same ADVICE-r4 pattern as locf_merge_chunked: materialize the
-    # chunk-windowed frame once; broadcast the (source, key, chunk)-grain
-    # stitch table back onto it
-    df = df.localCheckpoint(eager=False)
-    summ = df.groupBy(*KEY_COLS, "_chunk").agg(
+    e = e.withColumn("_lsidx", F.sum("_lnew").over(wcr))
+    e = e.withColumn("_ord", ord_col())
+    # NO localCheckpoint here (round 6): in Spark 4.1 a localCheckpoint
+    # resets outputPartitioning to Unknown, so BOTH consumers (the summary
+    # groupBy and the join probe) re-exchanged the event frame — two
+    # event-scale shuffles plus the checkpoint write. Both consumers hold
+    # the SAME plan object, so ReuseExchange dedups the window exchange at
+    # runtime (verified in the executed plan: one event exchange, the
+    # window recomputed per consumer for ~0.4s — measured 3.5s -> 2.7s at
+    # sf1.0).
+    # ONE summary groupBy: per-chunk LOCF carry state + session stitch facts
+    summ = e.groupBy(*KEY_COLS, "_chunk").agg(
+        *[
+            F.expr(f"max_by(_loc_{c}, _ord)").alias(f"_fin_{c}")
+            for c, _ in fields
+        ],
         F.min("ts").alias("_first_ts"),
         F.max("ts").alias("_last_ts"),
         F.max("_lsidx").alias("_nloc"),
-        F.expr("max_by(_lstart, struct(ts, seq))").alias("_last_lstart"),
     )
     ws = Window.partitionBy(*KEY_COLS).orderBy("_chunk")
     wsr = ws.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w_prev = ws.rowsBetween(Window.unboundedPreceding, -1)
+    for c, _ in fields:
+        summ = summ.withColumn(
+            f"_carry_{c}",
+            F.last(f"_fin_{c}", ignorenulls=True).over(w_prev),
+        )
     prev_last = F.lag(F.unix_millis("_last_ts")).over(ws)
-    merge_c = F.when(
-        prev_last.isNotNull()
-        & (F.unix_millis("_first_ts") - prev_last <= F.lit(gap_ms)),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    summ = summ.withColumn("_merge", merge_c)
+    summ = summ.withColumn(
+        "_merge",
+        F.when(
+            prev_last.isNotNull()
+            & (F.unix_millis("_first_ts") - prev_last <= F.lit(gap_ms)),
+            F.lit(1),
+        ).otherwise(F.lit(0)),
+    )
     summ = summ.withColumn("_news", F.col("_nloc") - F.col("_merge"))
     summ = summ.withColumn("_off", F.sum("_news").over(wsr) - F.col("_news"))
-    anchor = F.when(
-        ~((F.col("_nloc") == 1) & (F.col("_merge") == 1)), F.col("_last_lstart")
-    )
-    summ = summ.withColumn("_T", F.last(anchor, ignorenulls=True).over(wsr))
-    summ = summ.withColumn("_prevT", F.lag("_T").over(ws))
     summ = summ.withColumn(
         "_gmax",
         F.max(F.col("_off") + F.col("_news")).over(Window.partitionBy(*KEY_COLS)),
     )
-    j = df.join(
-        summ.select(*KEY_COLS, "_chunk", "_merge", "_off", "_prevT", "_gmax"),
+    # SHUFFLE_HASH, not broadcast (VERDICT r5 "what's wrong" #1): the
+    # summary is one row per populated (source, key, chunk) — unbounded
+    # over retention when the whole corpus routes through this path (at the
+    # sf1.0 bench 2-minute chunks already make it ~94% of the event count),
+    # so a forced broadcast eventually exceeds the 8 GB relation cap and
+    # has no fallback. The event side reuses the window's
+    # (source, key, chunk) hash partitioning with no new exchange; the
+    # summary side pays one small exchange and a per-partition hash build.
+    j = e.join(
+        summ.select(
+            *KEY_COLS, "_chunk", "_merge", "_off", "_gmax",
+            *[f"_carry_{c}" for c, _ in fields],
+        ).hint("SHUFFLE_HASH"),
         [*KEY_COLS, "_chunk"],
     )
-    backmerged = (F.col("_lsidx") == 1) & (F.col("_merge") == 1)
-    j = j.withColumn(
-        "new_sess", F.when(F.col("_lnew") == 1,
-                           F.when(backmerged, 0).otherwise(1)).otherwise(0)
+    sidx = F.col("_off") + F.col("_lsidx") - F.col("_merge")
+    # the join moved its keys to the front: restore the input's column
+    # order so the output matches the plain chain's schema exactly
+    return j.withColumn("sidx", sidx).select(
+        *states.columns,
+        *[
+            F.coalesce(F.col(f"_loc_{c}"), F.col(f"_carry_{c}"),
+                       F.lit(zero)).alias(f"{c}_m")
+            for c, zero in fields
+        ],
+        "sidx",
+        (F.col("sidx") == F.col("_gmax")).alias("is_trailing"),
+        F.lit(close_trailing).alias("close_trailing"),
     )
-    j = j.withColumn("sidx", F.col("_off") + F.col("_lsidx") - F.col("_merge"))
-    j = j.withColumn(
-        "s_start", F.when(backmerged, F.col("_prevT")).otherwise(F.col("_lstart"))
-    )
-    j = j.withColumn(
-        "session_id",
-        F.sha2(
-            F.concat_ws(
-                "|",
-                F.col("source"),
-                F.col("key").cast("string"),
-                F.unix_millis("s_start").cast("string"),
-                F.col("sidx").cast("string"),
-            ),
-            256,
-        ),
-    )
-    j = j.withColumn("is_trailing", F.col("sidx") == F.col("_gmax"))
-    j = j.withColumn("close_trailing", F.lit(close_trailing))
-    return j.drop("_chunk", "_lnew", "_lsidx", "_lstart", "_merge", "_off",
-                  "_prevT", "_gmax")
 
 
 def counter_increase_chunked(states: DataFrame, unit: str = "hour",
@@ -254,7 +187,7 @@ def counter_increase_chunked(states: DataFrame, unit: str = "hour",
     (oracle-checked as q43 against q41's SQL).
 
     A counter's only cross-chunk state is the LAST sample value, so the
-    stitch is the lightest of the chunked twins: Phase 1 lags n_tok within
+    stitch is the lightest of the chunked operators: Phase 1 lags n_tok within
     the bounded (source, key, chunk) window; Phase 2 summarizes each
     populated chunk's final n_tok (max_by over arrival order) and lags it
     one populated chunk back — the carry-in; Phase 3 joins the carry table
@@ -277,16 +210,13 @@ def counter_increase_chunked(states: DataFrame, unit: str = "hour",
     the 8 GB relation cap; the hash join's build side is per-partition and
     the event side reuses the window's partitioning with no new exchange.
     """
-    keep = [*KEY_COLS, "ts", "seq", "n_tok"] + (
-        ["_chunk"] if "_chunk" in states.columns else []
-    )
-    e = _with_chunk(states.select(*keep), chunk_ms).withColumn(
-        "_ord", ord_col())
+    e = _with_chunk(states.select(*KEY_COLS, "ts", "seq", "n_tok"),
+                    chunk_ms).withColumn("_ord", ord_col())
     wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
     e = e.withColumn("_prev_loc", F.lag("n_tok").over(wc))
     # no localCheckpoint: it resets outputPartitioning to Unknown (Spark
     # 4.1) and forces both consumers to re-exchange; ReuseExchange dedups
-    # the shared window exchange instead (see monster_safe_sessions).
+    # the shared window exchange instead (see chunked_sessions).
     summ = e.groupBy(*KEY_COLS, "_chunk").agg(
         F.expr("max_by(n_tok, _ord)").alias("_fin")
     )
@@ -310,17 +240,26 @@ def session_rollup_agg(sess_events: DataFrame) -> DataFrame:
     """A1 twin of ``session_rollup`` as a pure groupBy — every aggregate is
     partial-aggregatable (map-side combine), so a monster session reduces to
     one row per input partition before the shuffle instead of sorting the
-    whole session in one window task. Output == ``session_rollup``."""
+    whole session in one window task. Output == ``session_rollup``, schema
+    included."""
+    zero = dict(_MERGE_FIELDS)
+
+    def at_close(c):
+        # session_rollup reads these at the closing row, where the merged
+        # value is never null; max_by is nullable, so coalesce to the LOCF
+        # zero (never taken) to keep the two schemas equal
+        return F.coalesce(F.expr(f"max_by({c}_m, _ord)"), F.lit(zero[c]))
+
     e = sess_events.withColumn("_ord", ord_col())
     agg = e.groupBy("source", "key", "sidx").agg(
         F.min("ts").alias("started_at"),
         F.max("ts").alias("_last_ts"),
         F.count(F.lit(1)).alias("n_events"),
-        F.expr("max_by(callsign_m, _ord)").alias("callsign"),
+        at_close("callsign").alias("callsign"),
         F.expr("min_by(lat_m, _ord)").alias("first_lat"),
         F.expr("min_by(lon_m, _ord)").alias("first_lon"),
-        F.expr("max_by(lat_m, _ord)").alias("last_lat"),
-        F.expr("max_by(lon_m, _ord)").alias("last_lon"),
+        at_close("lat").alias("last_lat"),
+        at_close("lon").alias("last_lon"),
         F.max("altitude_m").alias("max_altitude"),
         F.max("ground_speed_m").alias("max_ground_speed"),
         F.any_value("is_trailing").alias("is_trailing"),
@@ -362,134 +301,18 @@ def monster_safe_sessions(
     chunk_ms: int = CHUNK_MS_DEFAULT,
     close_trailing: bool = True,
 ) -> DataFrame:
-    """The full monster-key-safe chain, FUSED: chunk-local LOCF and
-    chunk-local sessionization in ONE bounded window pass, one summary
-    groupBy carrying BOTH the LOCF carry state and the session stitch
-    fields, one broadcast join back, then the groupBy rollup. Output ==
+    """The full monster-key-safe session chain (q34): ``chunked_sessions``
+    then the groupBy rollup. Output ==
     session_rollup(sessionize(locf_merge(.))) — the hypothesis property
     test pins it to the plain chain and the oracle checks it as q34.
 
-    Why fused (round 5): the modular chain (locf_merge_chunked →
-    sessionize_chunked) costs TWO full event exchanges + sorts + checkpoint
-    materializations, because the sessionize step's self-join dedup
-    re-aliases the checkpointed scan and loses the phase-1 partitioning.
-    But the session lag columns depend only on (ts, seq) — never on LOCF
-    output — so both column families legally share one window pass. The
-    fusion halves the event-frame shuffle/sort/materialization count while
-    every window partition stays bounded to (source, key, chunk)."""
-    if chunk_ms <= gap_ms:
-        raise ValueError(
-            f"chunk_ms={chunk_ms} must exceed gap_ms={gap_ms}: a chunk "
-            f"shorter than the gap cannot bound the stitch to boundaries"
-        )
-    # Column-prune BEFORE the window/checkpoint: the rollup reads only five
-    # of the LOCF families (callsign/lat/lon/altitude/ground_speed) and
-    # never the token arrays — carrying `tokens` (the widest column by far)
-    # through the shuffle, the checkpoint blocks, and the join would charge
-    # the chain ~2x for bytes its output provably cannot contain.
-    rollup_reads = {"callsign", "lat", "lon", "altitude", "ground_speed"}
-    fields = [(c, z) for c, z in _MERGE_FIELDS if c in rollup_reads]
-    e = _with_chunk(
-        states.select(*KEY_COLS, "ts", "seq", *[c for c, _ in fields]),
-        chunk_ms,
-    )
-    wc = Window.partitionBy(*KEY_COLS, "_chunk").orderBy("ts", "seq")
-    wcr = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # LOCF locals (locf_merge_chunked phase 1)
-    for c, zero in fields:
-        e = e.withColumn(
-            f"_loc_{c}",
-            F.last(F.nullif(F.col(c), F.lit(zero)), ignorenulls=True).over(wcr),
-        )
-    # session locals (sessionize_chunked phase 1 — ts/seq only)
-    prev_ms = F.lag(F.unix_millis("ts")).over(wc)
-    e = e.withColumn(
-        "_lnew",
-        F.when(
-            prev_ms.isNull() | (F.unix_millis("ts") - prev_ms > F.lit(gap_ms)),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    e = e.withColumn("_lsidx", F.sum("_lnew").over(wcr))
-    e = e.withColumn(
-        "_lstart",
-        F.last(F.when(F.col("_lnew") == 1, F.col("ts")),
-               ignorenulls=True).over(wcr),
-    )
-    e = e.withColumn("_ord", ord_col())
-    # NO localCheckpoint here (round 6): in Spark 4.1 a localCheckpoint
-    # resets outputPartitioning to Unknown, so BOTH consumers (the summary
-    # groupBy and the join probe) re-exchanged the event frame — two
-    # event-scale shuffles plus the checkpoint write. Both consumers hold
-    # the SAME plan object, so ReuseExchange dedups the window exchange at
-    # runtime (verified in the executed plan: one event exchange, the
-    # window recomputed per consumer for ~0.4s — measured 3.5s -> 2.7s at
-    # sf1.0).
-    # ONE summary groupBy: per-chunk LOCF carry state + session stitch facts
-    summ = e.groupBy(*KEY_COLS, "_chunk").agg(
-        *[
-            F.expr(f"max_by(_loc_{c}, _ord)").alias(f"_fin_{c}")
-            for c, _ in fields
-        ],
-        F.min("ts").alias("_first_ts"),
-        F.max("ts").alias("_last_ts"),
-        F.max("_lsidx").alias("_nloc"),
-        F.expr("max_by(_lstart, struct(ts, seq))").alias("_last_lstart"),
-    )
-    ws = Window.partitionBy(*KEY_COLS).orderBy("_chunk")
-    wsr = ws.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_prev = ws.rowsBetween(Window.unboundedPreceding, -1)
-    for c, _ in fields:
-        summ = summ.withColumn(
-            f"_carry_{c}",
-            F.last(f"_fin_{c}", ignorenulls=True).over(w_prev),
-        )
-    prev_last = F.lag(F.unix_millis("_last_ts")).over(ws)
-    summ = summ.withColumn(
-        "_merge",
-        F.when(
-            prev_last.isNotNull()
-            & (F.unix_millis("_first_ts") - prev_last <= F.lit(gap_ms)),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    summ = summ.withColumn("_news", F.col("_nloc") - F.col("_merge"))
-    summ = summ.withColumn("_off", F.sum("_news").over(wsr) - F.col("_news"))
-    # NOTE: no anchored-LOCF chain-start columns here (the modular
-    # sessionize_chunked needs them for s_start/session_id) — this fused
-    # path feeds session_rollup_agg, which re-derives the chain start from
-    # min(ts) per (source, key, sidx), so carrying _T/_prevT would be dead
-    # weight in the summary join (ADVICE r5).
-    summ = summ.withColumn(
-        "_gmax",
-        F.max(F.col("_off") + F.col("_news")).over(Window.partitionBy(*KEY_COLS)),
-    )
-    # SHUFFLE_HASH, not broadcast (VERDICT r5 "what's wrong" #1): the
-    # summary is one row per populated (source, key, chunk) — unbounded
-    # over retention when the whole corpus routes through this path (at the
-    # sf1.0 bench 2-minute chunks already make it ~94% of the event count),
-    # so a forced broadcast eventually exceeds the 8 GB relation cap and
-    # has no fallback. The event side reuses the window's
-    # (source, key, chunk) hash partitioning with no new exchange; the
-    # summary side pays one small exchange and a per-partition hash build.
-    j = e.join(
-        summ.select(
-            *KEY_COLS, "_chunk", "_merge", "_off", "_gmax",
-            *[f"_carry_{c}" for c, _ in fields],
-        ).hint("SHUFFLE_HASH"),
-        [*KEY_COLS, "_chunk"],
-    )
-    for c, zero in fields:
-        j = j.withColumn(
-            f"{c}_m",
-            F.coalesce(F.col(f"_loc_{c}"), F.col(f"_carry_{c}"), F.lit(zero)),
-        )
-    # the rollup needs only sidx + trailing flags from the session family
-    # (session_rollup_agg derives session_id from min(ts), which equals the
-    # chain's true start by construction)
-    j = j.withColumn(
-        "sidx", F.col("_off") + F.col("_lsidx") - F.col("_merge")
-    )
-    j = j.withColumn("is_trailing", F.col("sidx") == F.col("_gmax"))
-    j = j.withColumn("close_trailing", F.lit(close_trailing))
-    return session_rollup_agg(j)
+    Column-prune BEFORE the chunked pass: the rollup reads only five of the
+    LOCF families (callsign/lat/lon/altitude/ground_speed) and never the
+    token arrays — carrying `tokens` (the widest column by far) through the
+    shuffle and the join would charge the chain ~2x for bytes its output
+    provably cannot contain."""
+    rollup_reads = ("callsign", "altitude", "ground_speed", "lat", "lon")
+    return session_rollup_agg(chunked_sessions(
+        states.select(*KEY_COLS, "ts", "seq", *rollup_reads),
+        gap_ms=gap_ms, chunk_ms=chunk_ms, close_trailing=close_trailing,
+    ))

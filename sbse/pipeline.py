@@ -39,11 +39,13 @@ def run_pipeline(
     redis/client.go:141-143; unit-test mock: missing=true,
     main_test.go:126-135).
 
-    ``bigkey_chunk_ms``: when set, the window stage runs through the
-    monster-key-safe chunked twins (sbse.bigkey) — every window partition
-    bounded to (source, key, chunk) — instead of the plain per-key windows.
-    Outputs are row-identical either way (asserted in test_bigkey); choose
-    it when one key's event count can exceed a single task's comfort zone.
+    ``bigkey_chunk_ms``: when set, the window stage runs as one
+    monster-key-safe chunked LOCF + session pass (sbse.bigkey.
+    chunked_sessions) — every window partition bounded to (source, key,
+    chunk) — instead of the plain per-key windows, and sessions roll up by
+    groupBy. Outputs are row-identical either way, and ``states`` keeps the
+    plain path's schema (asserted in test_bigkey); choose it when one key's
+    event count can exceed a single task's comfort zone.
     """
     from pyspark.sql import functions as F
 
@@ -55,14 +57,13 @@ def run_pipeline(
             F.coalesce(F.col("valid"), F.lit(default_valid))
         ).drop("valid")
     if bigkey_chunk_ms is not None:
-        from sbse.bigkey import (locf_merge_chunked, session_rollup_agg,
-                                 sessionize_chunked)
+        from sbse.bigkey import chunked_sessions, session_rollup_agg
 
-        merged = locf_merge_chunked(states, chunk_ms=bigkey_chunk_ms)
-        sess_events = sessionize_chunked(
-            merged, gap_ms=gap_ms, chunk_ms=bigkey_chunk_ms,
+        sess_events = chunked_sessions(
+            states, gap_ms=gap_ms, chunk_ms=bigkey_chunk_ms,
             close_trailing=close_trailing,
         )
+        merged = sess_events.drop("sidx", "is_trailing", "close_trailing")
         sessions = session_rollup_agg(sess_events)
     else:
         merged = locf_merge(states)

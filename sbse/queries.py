@@ -33,11 +33,8 @@ def _widen(df: DataFrame) -> DataFrame:
     multi-file/bucketed table this is a no-op. Content-deterministic:
     every downstream operator keys on values, never on partition or row
     order."""
-    import os
-
     target = df.sparkSession.sparkContext.defaultParallelism
-    if (os.environ.get("SBSE_WIDEN_DOCS", "1") != "0"
-            and df.rdd.getNumPartitions() < min(target, 16)):
+    if df.rdd.getNumPartitions() < min(target, 16):
         # hash on the unique id, not round-robin: keyless repartition(n)
         # pays a local sort of the input (sortBeforeRepartition, guide
         # §2.5); hashing a unique key needs no sort and spreads evenly.
@@ -558,10 +555,10 @@ def q35_quantile_cascade(spark, sf_dir):
 
 
 def q34_sessions_bigkey(spark, sf_dir):
-    """The monster-key-safe session chain (chunked LOCF -> chunked
-    sessionize -> groupBy rollup, sbse.bigkey): every window partition is
-    bounded by (source, key, 2-minute chunk) and sessions are stitched
-    across chunk boundaries through the per-chunk summary. Must equal q04
+    """The monster-key-safe session chain (one chunked LOCF + session pass
+    -> groupBy rollup, sbse.bigkey): every window partition is bounded by
+    (source, key, 2-minute chunk) and LOCF state and sessions are stitched
+    across chunk boundaries through one per-chunk summary. Must equal q04
     exactly — the oracle IS q04's SQL."""
     from sbse.bigkey import monster_safe_sessions
 

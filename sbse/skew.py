@@ -1,26 +1,16 @@
-"""Explicit skew handling (north_rule): salted repartitioning on
-(source, salt) — one hot ``source`` (src-00 carries ~50% of rows) must not
-pin a whole stage on one task.
+"""Content-derived partition labels for checkpoint/resume.
 
-AQE's skew-join splitting covers joins but NOT window-partition skew; for
-windows the partition key is (source, key), whose cardinality already
-spreads load — the salt below is for the scan/decode/write stages that would
-otherwise inherit the input's source clustering."""
+``checkpoint_partition`` labels every event with a stable partition derived
+from (source, entity key), so a per-partition run sees whole sessionization
+keys. The engine needs no salting for its hot ``source`` (src-00 carries
+~50% of rows): windows partition by (source, key), whose cardinality
+already spreads load; AQE splits skewed joins; and single-file scans are
+widened by a hash exchange on a unique id (sbse.tokens, sbse.queries)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_repartition(df: DataFrame, num_partitions: int,
-                       salt_buckets: int = 64, id_col: str = "doc_id") -> DataFrame:
-    """Repartition on (source, salt) where salt = xxhash64(id) % buckets —
-    deterministic, spreads a hot source over ``salt_buckets`` tasks."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-    )
-    return salted.repartition(num_partitions, "source", "_salt").drop("_salt")
 
 
 def entity_key_expr():

@@ -17,6 +17,12 @@ from sbse.dialect import SPARK, token_table_sql
 
 TOKEN_SCHEMA_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
 
+# Row floor for widening the events scan: below a few hundred thousand rows
+# the 2-core scan segment finishes faster than the extra exchange costs
+# (measured at sf0.1: the widen added ~0.1-0.2s to every sub-second event
+# query while saving nothing).
+WIDEN_MIN_ROWS = 300_000
+
 
 def token_table_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -25,20 +31,11 @@ def token_table_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # group, so every downstream stage up to the first shuffle (token
     # projection, checkpoint write, decode) ran on <= 2 of the cores. When
     # the source offers fewer splits than the cluster has slots, pay one
-    # round-robin exchange of the NARROW event rows (4 columns — before the
+    # hash exchange of the NARROW event rows (4 columns — before the
     # token arrays are built, so the shuffle moves ~30x fewer bytes than
     # widening the token table would); on a real multi-file table this is a
     # no-op. Content-deterministic: nothing downstream keys on partition or
-    # row order.
-    import os
-
-    # Row floor for the widen: below a few hundred thousand rows the
-    # 2-core scan segment finishes faster than the extra exchange costs
-    # (measured at sf0.1: the widen added ~0.1-0.2s to every sub-second
-    # event query while saving nothing). The footer read is a local
-    # metadata lookup; on a multi-file table the partition check below
-    # already makes the widen a no-op.
-    min_rows = int(os.environ.get("SBSE_WIDEN_MIN_ROWS", "300000"))
+    # row order. The footer read is a local metadata lookup.
     n_rows = None
     try:
         import pyarrow.parquet as pq
@@ -47,8 +44,7 @@ def token_table_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:
         pass
     par = spark.sparkContext.defaultParallelism
-    if (os.environ.get("SBSE_WIDEN_EVENTS", "1") != "0"
-            and (n_rows is None or n_rows >= min_rows)
+    if ((n_rows is None or n_rows >= WIDEN_MIN_ROWS)
             and ev.rdd.getNumPartitions() < min(par, 16)):
         # HASH repartition on the unique event id, not round-robin: a
         # keyless repartition(n) first pays a local sort of its input

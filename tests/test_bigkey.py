@@ -1,11 +1,11 @@
-"""Monster-key chunked twins (sbse.bigkey) — SURVEY §4.3 item 3.
+"""Monster-key chunked operators (sbse.bigkey) — SURVEY §4.3 item 3.
 
-Equality contracts: chunked LOCF / chunked sessionize / groupBy rollup must
-equal the plain window versions row-for-row on any input, including streams
-whose sessions straddle many chunk boundaries; plus a single-hot-key run at
-millions of events with an ANALYTIC ground truth (the case that pins the
-plain path to one sort task — the reference's unbounded per-key map defect,
-cmd/tracker/main.go:51-53)."""
+Equality contracts: the chunked LOCF + session pass / groupBy rollup /
+chunked counter must equal the plain window versions row-for-row on any
+input, including streams whose sessions straddle many chunk boundaries;
+plus a single-hot-key run at millions of events with an ANALYTIC ground
+truth (the case that pins the plain path to one sort task — the
+reference's unbounded per-key map defect, cmd/tracker/main.go:51-53)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,42 +28,52 @@ def _sym_diff(a, b):
             + b.select(cols).exceptAll(a.select(cols)).count())
 
 
+def _plain_events(st):
+    """The plain chain's per-event output, less the columns the chunked
+    pass does not emit."""
+    from sbse.sessionize import locf_merge, sessionize
+
+    return sessionize(locf_merge(st), gap_ms=30_000).drop(
+        "new_sess", "s_start", "session_id")
+
+
 def test_locf_chunked_equals_plain(spark):
-    from sbse.bigkey import locf_merge_chunked
+    """The chunked pass's LOCF part: its input columns plus the ``{c}_m``
+    columns equal locf_merge per event, schema (column order included)
+    and rows, with 2-minute chunks on real harness data."""
+    from sbse.bigkey import chunked_sessions
     from sbse.sessionize import locf_merge
 
     st = _states(spark)
-    assert _sym_diff(locf_merge(st), locf_merge_chunked(st, chunk_ms=120_000)) == 0
+    a = locf_merge(st)
+    b = chunked_sessions(st, gap_ms=30_000, chunk_ms=120_000).select(a.columns)
+    assert b.schema == a.schema
+    assert _sym_diff(a, b) == 0
 
 
 def test_sessionize_chunked_equals_plain(spark):
-    """2-minute chunks against 30 s gaps on real harness data: plenty of
-    straddles and multi-chunk chains."""
-    from sbse.bigkey import sessionize_chunked
-    from sbse.sessionize import locf_merge, sessionize
-
-    m = locf_merge(_states(spark)).localCheckpoint()
-    for chunk_ms in (120_000, 31_000):  # incl. chunk barely over the gap
-        a = sessionize(m, gap_ms=30_000)
-        b = sessionize_chunked(m, gap_ms=30_000, chunk_ms=chunk_ms)
-        assert _sym_diff(a, b) == 0, chunk_ms
-
-
-def test_modular_chain_keep_chunk(spark):
-    """locf_merge_chunked(keep_chunk=True) hands its _chunk column to
-    sessionize_chunked (which trusts a pre-attached _chunk instead of
-    recomputing the floor); the chain must still equal the plain path,
-    and the kept column must not leak into the sessionize output."""
-    from sbse.bigkey import locf_merge_chunked, sessionize_chunked
-    from sbse.sessionize import locf_merge, sessionize
+    """Per event, the chunked LOCF + session pass equals the plain chain,
+    schema (column order included) and rows: on real harness data with
+    2-minute chunks against 30 s gaps (plenty of straddles and multi-chunk
+    chains), a chunk barely over the gap, and chunk_ms == gap_ms + 1; and on
+    its empty and one-row subsets, through the session rollup too."""
+    from sbse.bigkey import chunked_sessions, monster_safe_sessions
+    from sbse.sessionize import locf_merge, session_rollup, sessionize
 
     st = _states(spark)
-    m = locf_merge_chunked(st, chunk_ms=120_000, keep_chunk=True)
-    assert "_chunk" in m.columns
-    b = sessionize_chunked(m, gap_ms=30_000, chunk_ms=120_000)
-    assert "_chunk" not in b.columns
-    a = sessionize(locf_merge(st), gap_ms=30_000)
-    assert _sym_diff(a, b) == 0
+    empty = st.limit(0).localCheckpoint()
+    one = st.orderBy("source", "key", "ts", "seq").limit(1).localCheckpoint()
+    for sub in (st, empty, one):
+        a = _plain_events(sub)
+        for chunk_ms in (120_000, 31_000, 30_001):
+            b = chunked_sessions(sub, gap_ms=30_000, chunk_ms=chunk_ms)
+            assert b.schema == a.schema, chunk_ms
+            assert _sym_diff(a, b) == 0, chunk_ms
+    for sub, n in ((empty, 0), (one, 1)):
+        plain = session_rollup(sessionize(locf_merge(sub), gap_ms=30_000))
+        chunked = monster_safe_sessions(sub, gap_ms=30_000, chunk_ms=120_000)
+        assert _sym_diff(plain, chunked) == 0
+        assert chunked.count() == n
 
 
 def test_rollup_agg_equals_window(spark):
@@ -71,24 +81,27 @@ def test_rollup_agg_equals_window(spark):
     from sbse.sessionize import locf_merge, session_rollup, sessionize
 
     s = sessionize(locf_merge(_states(spark)), gap_ms=30_000)
+    assert session_rollup_agg(s).schema == session_rollup(s).schema
     assert _sym_diff(session_rollup(s), session_rollup_agg(s)) == 0
 
 
 def test_chunk_must_exceed_gap(spark):
-    from sbse.bigkey import sessionize_chunked
+    from sbse.bigkey import chunked_sessions, monster_safe_sessions
 
-    with pytest.raises(ValueError, match="chunk_ms"):
-        sessionize_chunked(_states(spark), gap_ms=30_000, chunk_ms=30_000)
+    for op in (chunked_sessions, monster_safe_sessions):
+        with pytest.raises(ValueError, match="chunk_ms"):
+            op(_states(spark), gap_ms=30_000, chunk_ms=30_000)
 
 
 def test_full_chain_property_random_streams(spark):
-    """Hypothesis property: monster_safe_sessions == plain chain for random
-    per-key streams with random chunk sizes (boundary straddles, chains of
+    """Hypothesis property: chunked_sessions == plain chain per event, and
+    monster_safe_sessions == plain chain per session, for random per-key
+    streams with random chunk sizes (boundary straddles, chains of
     single-session chunks, duplicate timestamps)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from sbse.bigkey import monster_safe_sessions
+    from sbse.bigkey import chunked_sessions, monster_safe_sessions
     from sbse.decode import decode
     from sbse.sessionize import locf_merge, session_rollup, sessionize, states_only
     from tests.test_sessionize import mk
@@ -97,7 +110,7 @@ def test_full_chain_property_random_streams(spark):
     @given(
         st.lists(st.integers(min_value=0, max_value=3000),
                  min_size=1, max_size=30),
-        st.sampled_from([31_000, 45_000, 120_000]),
+        st.sampled_from([30_001, 31_000, 45_000, 120_000]),
     )
     def check(secs, chunk_ms):
         # two keys, sparse non-zero fields so LOCF carry-in matters
@@ -113,6 +126,8 @@ def test_full_chain_property_random_streams(spark):
         )
         chunked = monster_safe_sessions(st_df, gap_ms=30_000, chunk_ms=chunk_ms)
         assert _sym_diff(plain, chunked) == 0, (secs, chunk_ms)
+        events = chunked_sessions(st_df, gap_ms=30_000, chunk_ms=chunk_ms)
+        assert _sym_diff(_plain_events(st_df), events) == 0, (secs, chunk_ms)
 
     check()
 
@@ -158,8 +173,10 @@ def test_monster_single_key_analytic(spark):
 
 
 def test_pipeline_bigkey_mode_equals_plain(spark):
-    """run_pipeline(bigkey_chunk_ms=...) must produce the same sessions and
-    tiers as the plain window path — the production switch for hot keys."""
+    """run_pipeline(bigkey_chunk_ms=...) must produce the same states,
+    sessions and tiers as the plain window path — the production switch for
+    hot keys. ``states`` keeps the plain schema exactly (column order
+    included): the checkpointed job writes it."""
     from sbse.pipeline import run_pipeline
     from sbse.tokens import synth
 
@@ -167,7 +184,8 @@ def test_pipeline_bigkey_mode_equals_plain(spark):
     plain = run_pipeline(tok, decode_mode="expr", with_gorilla=False)
     big = run_pipeline(tok, decode_mode="expr", with_gorilla=False,
                        bigkey_chunk_ms=120_000)
-    for table in ("sessions", "rollup_1m", "rollup_1d", "gapfill_1h"):
+    for table in ("states", "sessions", "rollup_1m", "rollup_1d", "gapfill_1h"):
+        assert big[table].schema == plain[table].schema, table
         assert _sym_diff(plain[table], big[table]) == 0, table
 
 
@@ -208,24 +226,32 @@ def test_counter_chunked_equals_plain_across_boundaries(spark):
 
 
 def test_with_chunk_refuses_mismatched_reuse(spark):
-    """ADVICE r5: a pre-existing _chunk built with a different chunk_ms is
-    refused instead of silently mis-chunking the stitch; matching reuse
-    still avoids the recompute."""
+    """Any pre-existing _chunk is refused instead of trusted — one stamped
+    with a different chunk size (as the removed reuse protocol wrote it), one
+    stamped with the SAME size, and an unstamped one: none can be proven to
+    match this operator's chunking. A fresh frame gets the floor column."""
     import pytest
     from pyspark.sql import functions as F
 
-    from sbse.bigkey import _with_chunk
+    from sbse.bigkey import (_with_chunk, chunked_sessions,
+                             counter_increase_chunked)
 
     df = spark.createDataFrame(
-        [("s", 1, "2024-01-01 00:00:01", 1)],
-        "source string, key bigint, ts string, seq bigint",
+        [("s", 1, "2024-01-01 00:00:01", 1, 3)],
+        "source string, key bigint, ts string, seq bigint, n_tok int",
     ).withColumn("ts", F.to_timestamp("ts"))
     c = _with_chunk(df, 120_000)
-    assert c.schema["_chunk"].metadata == {"chunk_ms": 120_000}
-    assert _with_chunk(c, 120_000) is c
-    with pytest.raises(ValueError, match="chunk_ms"):
-        _with_chunk(c, 60_000)
-    # a foreign _chunk with no stamp is refused too
-    fake = df.withColumn("_chunk", F.lit(0))
-    with pytest.raises(ValueError, match="chunk_ms"):
-        _with_chunk(fake, 120_000)
+    assert c.columns == df.columns + ["_chunk"]
+    assert c.collect()[0]["_chunk"] == 1704067201000 // 120_000
+    chunk = F.floor(F.unix_millis("ts") / F.lit(120_000))
+    stamped = [df.select("*", chunk.alias("_chunk", metadata={"chunk_ms": ms}))
+               for ms in (60_000, 120_000)]
+    unstamped = df.withColumn("_chunk", F.lit(0))
+    for bad in [c, *stamped, unstamped]:
+        with pytest.raises(ValueError, match="_chunk"):
+            _with_chunk(bad, 120_000)
+        with pytest.raises(ValueError, match="_chunk"):
+            chunked_sessions(bad, gap_ms=30_000, chunk_ms=120_000)
+    # q43's operator selects its columns first, so a stray _chunk is
+    # pruned rather than trusted
+    assert counter_increase_chunked(unstamped, chunk_ms=120_000).count() == 1

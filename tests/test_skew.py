@@ -1,5 +1,5 @@
-"""Skew handling: the hot source (src-00 carries ~50% of rows — FIXTURES.md
-F1) must spread across many partitions after salted repartitioning."""
+"""Skew fixture: the synthetic token table plants a hot source (src-00
+carries ~50% of rows — FIXTURES.md F1)."""
 
 from pyspark.sql import functions as F
 
@@ -13,31 +13,3 @@ def test_source_skew_exists(spark):
     )
     assert share["source"] == "src-00"
     assert share["count"] > 4000 * 0.4  # the planted hot source
-
-
-def test_salted_repartition_spreads_hot_source(spark):
-    from pyspark.sql.functions import spark_partition_id
-
-    from sbse.skew import salted_repartition
-
-    tok = synth_hot = None
-    from sbse.tokens import synth
-
-    tok = synth(spark, 4000)
-    # naive repartition by source alone: src-00 lands in ONE partition
-    naive = tok.repartition(16, "source")
-    naive_parts = (
-        naive.filter(F.col("source") == "src-00")
-        .select(spark_partition_id().alias("p")).distinct().count()
-    )
-    assert naive_parts == 1
-
-    salted = salted_repartition(tok, 16, salt_buckets=64)
-    salted_parts = (
-        salted.filter(F.col("source") == "src-00")
-        .select(spark_partition_id().alias("p")).distinct().count()
-    )
-    assert salted_parts >= 12, f"hot source only spread over {salted_parts}/16"
-    # no rows lost, no dup
-    assert salted.count() == 4000
-    assert salted.columns == tok.columns  # _salt dropped
